@@ -31,7 +31,7 @@ def main() -> None:
     ap.add_argument("--input-kind", choices=["sf_dir", "pages"], default="sf_dir")
     ap.add_argument("--output", required=True)
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--fail-after", type=int, default=None, help="test hook: abort after N buckets")
+    ap.add_argument("--fail-after", type=int, default=None, help="test hook: abort after N committed buckets")
     args = ap.parse_args()
 
     from sparkotel import pages as P

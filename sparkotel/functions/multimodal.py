@@ -98,7 +98,10 @@ def frame_sample_plan(df: DataFrame, bin_col: str = "video", every_n: int = 30) 
     The decode is stubbed; the explode/partition shape is the real
     thing a frame-sampling pipeline needs."""
     n_frames = (F.length(F.col(bin_col)) / 1024).cast("int")  # fake frame count
-    idx = F.sequence(F.lit(0), F.greatest(n_frames - 1, F.lit(0)), F.lit(every_n))
+    # an empty or NULL video has no frames: no rows, not a phantom frame 0
+    idx = F.when(
+        n_frames > 0, F.sequence(F.lit(0), n_frames - 1, F.lit(every_n))
+    ).otherwise(F.array().cast("array<int>"))
     return df.withColumn("frame_idx", F.explode(idx))
 
 

@@ -2287,7 +2287,8 @@ def duck_paragraph_dedup(table: str = "documents") -> str:
     """Oracle twin — 1-based generate positions shifted to 0-based so
     the drop sets match posexplode exactly."""
     return f"""
-WITH src AS (SELECT doc_id, text, {duck_lined_text('text')} AS t FROM {table}),
+WITH src AS (
+  SELECT doc_id, text, coalesce({duck_lined_text('text')}, '') AS t FROM {table}),
 d AS (SELECT doc_id, text, string_split_regex(t, '\\n{{2,}}') AS arr FROM src),
 paras AS (
   SELECT doc_id, u.p AS p, u.pos AS pos FROM (

@@ -10,15 +10,16 @@ Batch-Spark design (SURVEY §7.4):
 - the input is split into P deterministic buckets:
   ``bucket = pmod(xxhash64(url), P)`` — stable across runs and cluster
   sizes (the fingerprint analogue);
-- the job processes buckets in batches; after a bucket's sink writes
-  commit, one ledger row ``(bucket, stage, rows, ts)`` is appended
-  (parquet append — each commit is its own file, so a crash mid-append
-  leaves either a complete row-group or nothing);
-- on restart, committed buckets are read back and the input is
-  filtered to the remainder (an anti-join that Catalyst folds into a
-  scan-side filter because the committed set is a small broadcast);
-- sink writes are idempotent per bucket (dynamic partition overwrite on
-  the bucket column), so a bucket killed mid-write is safely rewritten.
+- the job processes buckets in batches; after a batch's sink write
+  lands, its ledger rows ``(bucket, stage, rows, ts)`` are appended as
+  ONE parquet file (a crash mid-append leaves the whole commit or
+  nothing); ``rows`` comes from the footers of the files just written;
+- on restart, committed buckets are read back once and each batch
+  filters the input to its pending buckets (``bucket IN (...)`` on the
+  computed bucket, so every batch scans the source once);
+- sink writes are idempotent per bucket (dynamic partition overwrite,
+  bucket-led partitions), so a bucket killed mid-write or written but
+  not committed is safely rewritten.
 
 Lineage/metrics: ``stage_metrics`` records rows in/out/errors per stage
 per bucket — the obsreport analogue (adapter/receiver.go:55-66).
@@ -69,19 +70,12 @@ def committed_buckets(spark: SparkSession, ledger_path: str, stage: str) -> set[
 
 
 def commit_bucket(
-    spark: SparkSession, ledger_path: str, bucket: int, stage: str, rows: int
+    spark: SparkSession, ledger_path: str, stage: str, rows: dict[int, int]
 ) -> None:
+    """Commit a batch: one ledger row per ``{bucket: rows}`` entry, one file."""
     spark.createDataFrame(
-        [(bucket, stage, rows, time.time())], LEDGER_SCHEMA
+        [(b, stage, n, time.time()) for b, n in rows.items()], LEDGER_SCHEMA
     ).coalesce(1).write.mode("append").parquet(ledger_path)
-
-
-def remaining(df: DataFrame, spark: SparkSession, ledger_path: str, stage: str) -> DataFrame:
-    """Filter an already-bucketed frame to not-yet-committed buckets."""
-    done = committed_buckets(spark, ledger_path, stage)
-    if not done:
-        return df
-    return df.filter(~F.col("bucket").isin(sorted(done)))
 
 
 def run_resumable(
@@ -93,33 +87,34 @@ def run_resumable(
     n_buckets: int = 16,
     batch_size: int = 4,
     fail_after: int | None = None,
+    partition_by: tuple[str, ...] = ("bucket",),
+    done: set[int] | None = None,
 ) -> int:
-    """Process buckets in batches with per-batch commit.
+    """Process buckets in batches: per batch one dynamic-overwrite write
+    partitioned by ``partition_by`` and one ledger commit.
 
-    ``fail_after`` aborts after N committed buckets (test hook for the
-    kill/resume scenario).  Returns the number of buckets committed in
-    THIS run.  Output is partitioned by bucket; dynamic partition
-    overwrite keeps half-written buckets safe to rewrite.
+    ``done`` holds the already-committed buckets (read from the ledger
+    when None).  ``fail_after`` stops after N committed buckets (the
+    kill/resume test hook): the batch reaching N is written in full but
+    committed only up to N.  Returns the buckets committed in THIS run.
     """
     df = with_bucket(df, n_buckets=n_buckets)
-    done = committed_buckets(spark, ledger_path, stage)
+    if done is None:
+        done = committed_buckets(spark, ledger_path, stage)
     todo = [b for b in range(n_buckets) if b not in done]
     committed = 0
     for i in range(0, len(todo), batch_size):
         batch = todo[i : i + batch_size]
-        part = df.filter(F.col("bucket").isin(batch))
         (
-            part.write.mode("overwrite")
+            df.filter(F.col("bucket").isin(batch))
+            .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
+            .partitionBy(*partition_by)
             .parquet(out_path)
         )
         # per-bucket row counts from the files just written: partition
         # pruning limits the scan to this batch's directories and a
-        # no-column count(*) is satisfied from parquet footers, so this
-        # is metadata-cheap (vs. re-running the whole pipeline with
-        # part.count(), which also mis-attributed the batch total to
-        # every bucket in the batch).
+        # no-column count(*) is read from parquet footers.
         counts = {
             r["bucket"]: r["n"]
             for r in spark.read.parquet(out_path)
@@ -128,11 +123,12 @@ def run_resumable(
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         }
-        for b in batch:
-            commit_bucket(spark, ledger_path, b, stage, counts.get(b, 0))
-            committed += 1
-            if fail_after is not None and committed >= fail_after:
-                return committed
+        if fail_after is not None:
+            batch = batch[: fail_after - committed]
+        commit_bucket(spark, ledger_path, stage, {b: counts.get(b, 0) for b in batch})
+        committed += len(batch)
+        if committed == fail_after:
+            break
     return committed
 
 

@@ -4794,7 +4794,7 @@ FROM x""",
         """WITH n AS (
   SELECT doc_id, CAST(n_chars * 60 // 1024 AS INT) AS nf FROM documents)
 SELECT doc_id,
-  CAST(unnest(range(0, greatest(nf - 1, 0) + 1, 5)) AS INT) AS frame_idx
+  CAST(unnest(range(0, nf, 5)) AS INT) AS frame_idx
 FROM n""",
     )
     # ViT-style image patch grid: deterministic fake (width, height)

@@ -10,13 +10,17 @@ Usage (cluster):
         --spec tests/fixtures/pipeline_m1.json \
         --input /data/pages --output /data/out
 
-At 10^12 rows the shape holds: one streaming pass (scan → codegen'd
-parse/enrich projections → broadcast joins → first-match route) into a
-bucket+route-partitioned write; aggregates re-read the pruned columns
-of the materialized sink table.
+Buckets go through ``ledger.run_resumable`` in batches of 4: one scan
+per batch (codegen'd parse/enrich projections → broadcast joins →
+first-match route) into one bucket+route-partitioned write, then one
+ledger commit per batch.  Metrics re-read the pruned columns of the
+sink table as a union of per-(sink, metric) ``connector_metric``s;
+``bench.py`` and the registry use ``connector_metrics_single_pass``.
 """
 
 from __future__ import annotations
+
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -77,7 +81,8 @@ def run(
     resume: bool = True,
     fail_after: int | None = None,
 ) -> dict:
-    """Execute the pipeline with ledger resumability.
+    """Execute the pipeline with ledger resumability; ``resume=False``
+    starts over with a new ledger.
 
     Writes:
       {output}/routed/            bucket+route-partitioned records
@@ -86,25 +91,16 @@ def run(
       {output}/_ledger/           commit log
     Returns summary counts.
     """
-    routed = build_routed(spark, src, spec)
     ledger_path = f"{output}/_ledger"
-
-    routed = L.with_bucket(routed, key="url", n_buckets=spec.n_buckets)
-    done = L.committed_buckets(spark, ledger_path, "routed") if resume else set()
-    todo = [b for b in range(spec.n_buckets) if b not in done]
-    committed = 0
-    for b in todo:
-        part = routed.filter(F.col("bucket") == b)
-        (
-            part.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket", "route")
-            .parquet(f"{output}/routed")
-        )
-        L.commit_bucket(spark, ledger_path, b, "routed", part.count())
-        committed += 1
-        if fail_after is not None and committed >= fail_after:
-            return {"committed": committed, "resumed_from": len(done), "complete": False}
+    if not resume:  # starting over: the earlier run's commits describe nothing now
+        shutil.rmtree(ledger_path, ignore_errors=True)
+    done = L.committed_buckets(spark, ledger_path, "routed")
+    committed = L.run_resumable(
+        spark, build_routed(spark, src, spec), f"{output}/routed", ledger_path, "routed",
+        spec.n_buckets, fail_after=fail_after, partition_by=("bucket", "route"), done=done,
+    )
+    if committed == fail_after:
+        return {"committed": committed, "resumed_from": len(done), "complete": False}
 
     back = spark.read.parquet(f"{output}/routed")
     # copy-mode routes see the full stream (plogutil copy semantics)

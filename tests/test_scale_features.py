@@ -1643,6 +1643,44 @@ def test_paragraph_dedup_keep_first(spark):
     assert got[3]["n_dropped"] == 0 and "unique" in got[3]["dedup_text"]
 
 
+def _registry_parity_on_docs(spark, tmp_path, name, rows):
+    """Spark vs DuckDB for registry query ``name`` over a hand-made
+    documents table (doc_id, text, n_chars); returns the Spark rows."""
+    import duckdb
+
+    from sparkotel.registry import build_registry
+    from test_oracle_parity import oracle_rows, spark_rows
+
+    docs = str(tmp_path / "documents.parquet")
+    spark.createDataFrame(
+        rows, "doc_id long, text string, n_chars long"
+    ).repartition(1).write.mode("overwrite").parquet(docs)
+    q = build_registry()[name]
+    got = spark_rows(q.spark(spark, str(tmp_path)))
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{docs}/*.parquet'")
+    assert got == oracle_rows(con, q.oracle)
+    return got
+
+
+def test_paragraph_dedup_oracle_parity_null_and_empty_text(spark, tmp_path):
+    """NULL and empty text have zero paragraphs (n_paras 0, not NULL)
+    on both engines."""
+    rows = [(0, "xx yy table xx yy table", 6), (1, None, None), (2, "", 0)]
+    got = _registry_parity_on_docs(spark, tmp_path, "paragraph_dedup", rows)
+    # sorted columns: dedup_text, doc_id, n_dropped, n_paras
+    assert (None, 1, 0, 0) in got and ("", 2, 0, 0) in got
+
+
+def test_frame_sample_plan_no_phantom_frame(spark, tmp_path):
+    """an empty, NULL or sub-frame video emits no frame rows on either
+    engine; longer videos sample every 5th frame from 0."""
+    rows = [(0, "a", 0), (1, "b", None), (2, "c", 10), (3, "d", 100), (4, "e", 200)]
+    got = _registry_parity_on_docs(spark, tmp_path, "multimodal_frame_sample", rows)
+    # 100 * 60 B = 5 frames -> [0]; 200 * 60 B = 11 frames -> [0, 5, 10]
+    assert sorted(got) == [(3, 0), (4, 0), (4, 5), (4, 10)]
+
+
 def test_bpe_train_matches_reference_algorithm(spark):
     """bpe_train must equal an independent Python replay of Sennrich
     BPE (greedy leftmost non-overlapping merge, count-then-lex argmax,
