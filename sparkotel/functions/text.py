@@ -14,6 +14,8 @@ oracle-check it.
 
 from __future__ import annotations
 
+import heapq
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -2332,27 +2334,10 @@ FROM out
 BPE_MERGES = 6
 
 
-def bpe_train(
-    df: DataFrame, k: int = BPE_MERGES, text_col: str = "text"
-) -> DataFrame:
-    """Byte-pair-encoding merge training over the corpus vocabulary —
-    the tokenizer-induction inner loop (Sennrich ACL 2016): start from
-    characters (+ the ``</w>`` end-of-word marker), repeatedly take the
-    most frequent adjacent symbol pair (ties: lexicographic) and merge
-    its leftmost non-overlapping occurrences in every word.
-
-    Scale shape: the iteration is DRIVER-BOUND ONLY on metadata — the
-    ``ivf_kmeans_centroids`` pattern: each round is one scan of the
-    word-VOCABULARY frame (already aggregated from the corpus: one
-    map-side-combined shuffle total, words dedup before any BPE work),
-    one tiny pair-count aggregate, and a ONE-ROW collect of the argmax;
-    the merge applies as a per-word array fold (pure projection).  ``k``
-    is a fixed small constant, so the whole train is O(k) vocab scans —
-    no driver-side loop over data rows.
-
-    Output: (rank, sym_a, sym_b, merged, pair_count), one row per merge
-    in training order — the merges table a tokenizer ships.
-    """
+def _bpe_vocab(df: DataFrame, text_col: str) -> DataFrame:
+    """(w, n, syms): the word vocabulary with its counts and starting
+    symbols — one symbol per character, ``</w>`` riding the last one.
+    Shared by ``bpe_train`` and ``bpe_encode_stats``."""
     vocab = (
         df.select(F.explode(words(F.coalesce(F.col(text_col), F.lit("")))).alias("w"))
         .filter(F.col("w") != "")
@@ -2366,68 +2351,110 @@ def bpe_train(
             i == F.size(chars) - 1, F.concat(x, F.lit("</w>"))
         ).otherwise(x),
     )
-    vocab = vocab.select("w", "n", syms.alias("syms")).localCheckpoint()
-    vocab, out_rows = _bpe_rounds(vocab, k)
-    spark = df.sparkSession
-    return spark.createDataFrame(
+    return vocab.select("w", "n", syms.alias("syms"))
+
+
+def bpe_train(
+    df: DataFrame, k: int = BPE_MERGES, text_col: str = "text"
+) -> DataFrame:
+    """Byte-pair-encoding merge training over the corpus vocabulary —
+    the tokenizer-induction inner loop (Sennrich ACL 2016): start from
+    characters (+ the ``</w>`` end-of-word marker), repeatedly take the
+    most frequent adjacent symbol pair (ties: lexicographic) and merge
+    its leftmost non-overlapping occurrences in every word.
+
+    Scale shape: Spark builds the word VOCABULARY (one map-side-combined
+    shuffle; words dedup before any BPE work) and the driver collects it
+    once; all ``k`` rounds then run in the driver over that list
+    (``_bpe_rounds``), so the Spark job count does not grow with ``k``.
+    Driver memory is bounded by distinct words × symbols per word.
+
+    Output: (rank, sym_a, sym_b, merged, pair_count), one row per merge
+    in training order — the merges table a tokenizer ships.
+    """
+    _, out_rows = _bpe_rounds(_bpe_vocab(df, text_col), k)
+    return df.sparkSession.createDataFrame(
         out_rows, "rank int, sym_a string, sym_b string, merged string, pair_count bigint"
     )
 
 
 def _bpe_rounds(vocab: DataFrame, k: int):
-    """run ``k`` merge rounds; returns (final vocab with merged syms,
-    the merge rows).  Shared by ``bpe_train`` and ``bpe_encode_stats``."""
+    """Collect the (w, n, syms) vocabulary once and run up to ``k``
+    merge rounds in the driver; returns ([(w, merged syms)], the merge
+    rows).  Rounds stop early once no pair is left.
+
+    The pair counts live in a dict and a heap of (-count, a, b) — the
+    minimum is ``ORDER BY count DESC, a, b`` (Python orders str by code
+    point, as Spark and DuckDB order UTF-8 by byte).  A round re-counts
+    only the words holding the merged pair, so its cost follows those
+    words, not the vocabulary; heap entries whose count went stale are
+    skipped when popped.  Driver memory is distinct words × symbols."""
+    rows = vocab.collect()
+    n = [r["n"] for r in rows]
+    syms = [list(r["syms"]) for r in rows]
+    pair_n: dict = {}
+    holders: dict = {}  # pair -> indices of the words that contain it
+
+    def tally(i: int, sign: int, touched: set) -> None:
+        s = syms[i]
+        for p in zip(s, s[1:]):
+            pair_n[p] = pair_n.get(p, 0) + sign * n[i]
+            if sign > 0:
+                holders.setdefault(p, set()).add(i)
+            else:
+                holders[p].discard(i)
+            touched.add(p)
+
+    def push(pairs) -> None:
+        for p in pairs:
+            if pair_n[p] > 0:
+                heapq.heappush(heap, (-pair_n[p], *p))
+            else:
+                del pair_n[p], holders[p]
+
+    heap: list = []
+    touched: set = set()
+    for i in range(len(syms)):
+        tally(i, 1, touched)
+    push(touched)
     out_rows = []
     for rank in range(1, k + 1):
-        pairs = vocab.filter(F.size("syms") > 1).select(
-            "n",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(syms)-2),"
-                    " i -> struct(syms[i] AS a, syms[i+1] AS b))"
-                )
-            ).alias("p"),
-        )
-        best = (
-            pairs.groupBy("p.a", "p.b")
-            .agg(F.sum("n").alias("cnt"))
-            .orderBy(F.desc("cnt"), "a", "b")
-            .limit(1)
-            .collect()
-        )
-        if not best:  # vocabulary fully merged before k rounds
+        while heap and pair_n.get(heap[0][1:]) != -heap[0][0]:
+            heapq.heappop(heap)
+        if not heap:  # vocabulary fully merged before k rounds
             break
-        a, b, cnt = best[0]["a"], best[0]["b"], int(best[0]["cnt"])
+        cnt, a, b = heapq.heappop(heap)
         merged = a + b
-        out_rows.append((rank, a, b, merged, cnt))
-        apply_merge = F.when(F.size("syms") <= 1, F.col("syms")).otherwise(
-            F.aggregate(
-                F.slice(F.col("syms"), 2, F.size("syms") - 1),
-                F.slice(F.col("syms"), 1, 1),
-                lambda acc, x: F.when(
-                    (F.element_at(acc, -1) == F.lit(a)) & (x == F.lit(b)),
-                    F.concat(
-                        F.slice(acc, 1, F.size(acc) - 1), F.array(F.lit(merged))
-                    ),
-                ).otherwise(F.concat(acc, F.array(x))),
-            )
-        )
-        # localCheckpoint: k rounds of array folds would otherwise nest
-        # into one k-deep interpreted expression over the vocab frame
-        vocab = vocab.withColumn("syms", apply_merge).localCheckpoint()
-    return vocab, out_rows
+        out_rows.append((rank, a, b, merged, -cnt))
+        touched = set()
+        for i in list(holders[(a, b)]):
+            tally(i, -1, touched)
+            out: list = []
+            for x in syms[i]:  # leftmost non-overlapping occurrences
+                if out and out[-1] == a and x == b:
+                    out[-1] = merged
+                else:
+                    out.append(x)
+            syms[i] = out
+            tally(i, 1, touched)
+        push(touched)
+    return [(r["w"], s) for r, s in zip(rows, syms)], out_rows
 
 
 def duck_bpe_train(table: str = "documents", k: int = BPE_MERGES) -> str:
     """Oracle twin — the k training rounds unrolled into CTE chains
     (the duck_ivf_kmeans discipline); the merge application is a
-    list_reduce fold identical to Spark's F.aggregate fold."""
+    list_reduce fold identical to the driver fold in ``_bpe_rounds``."""
     parts = _duck_bpe_parts(table, k)
-    union = "\nUNION ALL\n".join(
+    rounds = [
         f"SELECT CAST({i} AS INT) AS rank, a AS sym_a, b AS sym_b, a || b AS merged, cnt AS pair_count FROM b{i}"
         for i in range(1, k + 1)
-    )
-    return "WITH " + ",\n".join(parts) + "\n" + union
+    ] or [  # k = 0: no merges
+        "SELECT CAST(NULL AS INT) AS rank, CAST(NULL AS VARCHAR) AS sym_a,"
+        " CAST(NULL AS VARCHAR) AS sym_b, CAST(NULL AS VARCHAR) AS merged,"
+        " CAST(NULL AS BIGINT) AS pair_count WHERE false"
+    ]
+    return "WITH " + ",\n".join(parts) + "\n" + "\nUNION ALL\n".join(rounds)
 
 
 def _duck_bpe_parts(table: str, k: int) -> list:
@@ -2455,13 +2482,13 @@ def _duck_bpe_parts(table: str, k: int) -> list:
         parts.append(
             f"""v{i} AS (
   SELECT w, n,
-    CASE WHEN len(syms) <= 1 THEN syms ELSE
+    CASE WHEN b{i}.a IS NULL OR len(syms) <= 1 THEN syms ELSE
       list_reduce(list_transform(syms, x -> [x]), (acc, x) ->
         CASE WHEN acc[len(acc)] = b{i}.a AND x[1] = b{i}.b
              THEN list_append(list_slice(acc, 1, len(acc) - 1), b{i}.a || b{i}.b)
              ELSE list_append(acc, x[1]) END)
     END AS syms
-  FROM v{i - 1} CROSS JOIN b{i}
+  FROM v{i - 1} LEFT JOIN b{i} ON TRUE
 )"""
         )
     return parts
@@ -2475,11 +2502,12 @@ def bpe_encode_stats(
     pipeline ships, and the honest replacement for regex token-count
     proxies once merges exist.
 
-    Scale shape (the ``lm_surprisal`` discipline): the merges apply on
-    the VOCABULARY frame only (per-word symbol counts computed once per
-    distinct word, never per token); documents explode to (id, word)
-    and join the word→count table — word-keyed on both sides, unhinted
-    so AQE broadcasts small vocabularies; the per-doc groupBy is
+    Scale shape (the ``lm_surprisal`` discipline): the merges apply to
+    the collected VOCABULARY only, in the driver (``_bpe_rounds``), so
+    per-word symbol counts are computed once per distinct word, never
+    per token.  The (word, symbol count) list ships back as a small
+    frame; documents explode to (id, word) and join it — word-keyed on
+    both sides, unhinted so AQE broadcasts it; the per-doc groupBy is
     map-side combinable sums.
 
     Output: (id, n_words, n_char_syms, n_bpe_tokens) — n_char_syms is
@@ -2487,26 +2515,10 @@ def bpe_encode_stats(
     rides the last character), so n_char_syms − n_bpe_tokens is the
     compression the k merges bought.  Empty/NULL text → zeros.
     """
-    vocab = (
-        df.select(F.explode(words(F.coalesce(F.col(text_col), F.lit("")))).alias("w"))
-        .filter(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    chars = F.regexp_extract_all(F.col("w"), F.lit("."), 0)
-    syms = F.transform(
-        chars,
-        lambda x, i: F.when(
-            i == F.size(chars) - 1, F.concat(x, F.lit("</w>"))
-        ).otherwise(x),
-    )
-    vocab = vocab.select("w", "n", syms.alias("syms")).localCheckpoint()
-    vocab, _ = _bpe_rounds(vocab, k)
-    wstats = vocab.select(
-        "w",
-        F.size("syms").cast("bigint").alias("_nsym"),
-        F.length("w").cast("bigint").alias("_nchr"),
-    )
+    final, _ = _bpe_rounds(_bpe_vocab(df, text_col), k)
+    wstats = df.sparkSession.createDataFrame(
+        [(w, len(syms)) for w, syms in final], "w string, _nsym bigint"
+    ).withColumn("_nchr", F.length("w").cast("bigint"))
     toks = df.select(
         F.col(id_col).alias("id"),
         F.explode(words(F.coalesce(F.col(text_col), F.lit("")))).alias("w"),

@@ -120,7 +120,15 @@ def iforest_golden(
     """Single-process twin of the registry ``isolation_forest`` query:
     events → (x = value, y = props.k or 0) → md5-ranked training window
     → seeded forest → score all rows → (1-contamination) exact-percentile
-    threshold → flagged rows (event_id, x, y, round(score, 6))."""
+    threshold → flagged rows (event_id, x, y, round(score, 6)).
+
+    Not independent of the query: it imports the same ``train_forest``
+    / ``score_rows`` kernel the registry query runs, so it checks the
+    Spark plumbing around the kernel (windowing, threshold, output), not
+    the isolation-forest math.  The math is pinned by the independent
+    property tests in ``tests/test_iforest.py`` (planted outliers score
+    highest, ``test_outliers_score_highest``; constant data scores
+    uniformly, ``test_score_math_degenerate``)."""
     from sparkotel.functions.iforest import score_rows, train_forest
 
     ev = pd.read_parquet(

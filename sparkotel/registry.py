@@ -4600,9 +4600,9 @@ FROM g""",
         TX.duck_bm25_topk(),
     )
 
-    # BPE merge training (Sennrich 2016): k driver rounds over the
-    # word vocabulary, one-row argmax collects, fold-applied merges;
-    # oracle unrolls the same k rounds as CTE chains
+    # BPE merge training (Sennrich 2016): one collect of the word
+    # vocabulary, then all k merge rounds in the driver (job count
+    # constant in k); oracle unrolls the same k rounds as CTE chains
     q["bpe_train"] = Query(
         lambda spark, sf: TX.bpe_train(_docs(spark, sf)),
         TX.duck_bpe_train(),

@@ -234,6 +234,38 @@ def test_ivf_topk_recall(spark):
         assert abs(bf[(r["qid"], r["cid"])] - r["score"]) < 1e-9
 
 
+@pytest.mark.parametrize("kmeans_iters", [0, 2])
+def test_ivf_topk_non_default_dim_parity(spark, tmp_path, kmeans_iters):
+    """``dim`` reaches the centroid seed filter: with 4-dim vectors no
+    row passes a dim=64 filter, so the Spark side must take ``dim`` to
+    match its DuckDB twin."""
+    import random
+
+    import duckdb
+
+    from test_oracle_parity import oracle_rows, spark_rows
+
+    rnd = random.Random(3)
+    rows = [(i, [rnd.uniform(-1, 1) for _ in range(4)], 0) for i in range(40)]
+    path = str(tmp_path / "embeddings.parquet")
+    spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    ).repartition(1).write.parquet(path)
+    emb = spark.read.parquet(path)
+    qids = [0, 1, 2]
+    got = spark_rows(
+        SIM.ivf_topk(emb, qids, n_centroids=4, n_probe=2, kmeans_iters=kmeans_iters, dim=4)
+    )
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{path}/*.parquet'")
+    if kmeans_iters:
+        sql = SIM.duck_ivf_kmeans_topk(qids, n_centroids=4, iters=kmeans_iters, dim=4)
+    else:
+        sql = SIM.duck_ivf_topk(qids, n_centroids=4, dim=4)
+    assert got == oracle_rows(con, sql)
+    assert len(got) == 15  # top-5 for each of the three queries
+
+
 def test_ivf_kmeans_rebalances_skewed_seeds(spark):
     """first-N-by-id seeding is data-order luck (VERDICT r2 #4): when the
     first 8 ids all sit in one tight cluster, a second far cluster piles
@@ -1681,27 +1713,17 @@ def test_frame_sample_plan_no_phantom_frame(spark, tmp_path):
     assert sorted(got) == [(3, 0), (4, 0), (4, 5), (4, 10)]
 
 
-def test_bpe_train_matches_reference_algorithm(spark):
-    """bpe_train must equal an independent Python replay of Sennrich
-    BPE (greedy leftmost non-overlapping merge, count-then-lex argmax,
-    </w> marker) on a crafted corpus."""
+def _bpe_reference(docs, k):
+    """Independent Python replay of Sennrich BPE over ``docs``: full
+    re-count every round, greedy leftmost non-overlapping merge,
+    count-then-lex argmax, </w> marker.  Returns (a, b, a+b, count) per
+    merge."""
     from collections import Counter
 
-    from sparkotel.functions import text as T
-
-    docs = [
-        "aaa aaa aaa ab ab banana banana bandana",
-        "aaa ab banana cabana",
-        "",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(docs)], "doc_id long, text string"
-    )
-
-    vocab = Counter(w for t in docs for w in t.split(" ") if w)
+    vocab = Counter(w for t in docs for w in (t or "").split(" ") if w)
     syms = {w: [*w[:-1], w[-1] + "</w>"] for w in vocab}
     expected = []
-    for _ in range(4):
+    for _ in range(k):
         counts = Counter()
         for w, n in vocab.items():
             s = syms[w]
@@ -1719,11 +1741,133 @@ def test_bpe_train_matches_reference_algorithm(spark):
                 else:
                     out.append(x)
             syms[w] = out
+    return expected
+
+
+def test_bpe_train_matches_reference_algorithm(spark):
+    """bpe_train must equal an independent Python replay of Sennrich
+    BPE (greedy leftmost non-overlapping merge, count-then-lex argmax,
+    </w> marker) on a crafted corpus."""
+    from sparkotel.functions import text as T
+
+    docs = [
+        "aaa aaa aaa ab ab banana banana bandana",
+        "aaa ab banana cabana",
+        "",
+    ]
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(docs)], "doc_id long, text string"
+    )
+
+    expected = _bpe_reference(docs, 4)
     got = [
         (r["sym_a"], r["sym_b"], r["merged"], r["pair_count"])
         for r in T.bpe_train(df, k=4).orderBy("rank").collect()
     ]
     assert got == expected and len(got) == 4
+
+
+def _bpe_parity(spark, tmp_path, texts, k):
+    """Spark vs DuckDB twin for ``bpe_train`` and ``bpe_encode_stats``
+    at ``k`` over a documents table holding ``texts``: equal rows and an
+    equal order-independent hash (the benchmark's output check).
+    Returns each query's Spark rows, columns in name order, sorted."""
+    import duckdb
+
+    from perfbench.oracle import digest
+    from sparkotel.functions import text as T
+
+    docs = str(tmp_path / "documents.parquet")
+    spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    ).repartition(1).write.mode("overwrite").parquet(docs)
+    df = spark.read.parquet(docs)
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{docs}/*.parquet'")
+    out = {}
+    for name, query, twin in [
+        ("bpe_train", T.bpe_train, T.duck_bpe_train),
+        ("bpe_encode_stats", T.bpe_encode_stats, T.duck_bpe_encode_stats),
+    ]:
+        sdf = query(df, k=k)
+        cols = sorted(sdf.columns)
+        got = [tuple(r) for r in sdf.select(*cols).collect()]
+        want = con.sql(twin("documents", k=k)).select(*[f'"{c}"' for c in cols]).fetchall()
+        assert sorted(got, key=repr) == sorted(want, key=repr), name
+        assert digest(got) == digest(want), name
+        out[name] = sorted(got, key=repr)
+    con.close()
+    return out
+
+
+def test_bpe_exhausted_vocabulary_parity(spark, tmp_path):
+    """The vocabulary runs out of pairs after one merge, well before
+    k=6: training stops there and encoding keeps the merged symbols on
+    both engines (the oracle once zeroed every document here)."""
+    got = _bpe_parity(spark, tmp_path, ["ab ab", "c"], k=6)
+    # bpe_train columns: merged, pair_count, rank, sym_a, sym_b
+    assert got["bpe_train"] == [("ab</w>", 2, 1, "a", "b</w>")]
+    # bpe_encode_stats columns: doc_id, n_bpe_tokens, n_char_syms, n_words
+    assert got["bpe_encode_stats"] == [(0, 2, 4, 2), (1, 1, 1, 1)]
+
+
+@pytest.mark.parametrize(
+    "texts,k",
+    [
+        pytest.param([None, "", "ab ab"], 6, id="null-empty"),
+        pytest.param(["a b a c", "b"], 6, id="one-char-words"),
+        pytest.param(["aaaa aaa", "aa aaaaa"], 6, id="overlapping-repeats"),
+        pytest.param(["ab cd", "ay ax"], 6, id="equal-counts"),
+        # equal counts across z < é < 中 < ｚ < 𝄞: code-point order is
+        # UTF-8 byte order, while UTF-16 would put 𝄞 before ｚ
+        pytest.param(["é中 中é éz", "zé 𝄞ｚ ｚ𝄞"], 6, id="non-ascii"),
+        pytest.param(["banana bandana", "ab"], 0, id="k0"),
+    ],
+)
+def test_bpe_parity_degenerate_input(spark, tmp_path, texts, k):
+    """bpe_train and bpe_encode_stats match their DuckDB twins on
+    degenerate and tie-breaking input, and the merges match the
+    reference replay."""
+    got = _bpe_parity(spark, tmp_path, texts, k)
+    merges = sorted(got["bpe_train"], key=lambda r: r[2])
+    assert [(r[3], r[4], r[0], r[1]) for r in merges] == _bpe_reference(texts, k)
+
+
+def test_bpe_jobs_constant_in_k(spark):
+    """The merge rounds run in the driver: bpe_train and
+    bpe_encode_stats issue as many Spark jobs at k=64 as at k=4, and
+    the 64 merges equal the reference replay."""
+    import random
+
+    from sparkotel.functions import text as T
+
+    rnd = random.Random(5)
+    docs = [
+        " ".join(
+            "".join(rnd.choice("abcdefgh") for _ in range(rnd.randint(2, 8)))
+            for _ in range(20)
+        )
+        for _ in range(10)
+    ]
+    df = spark.createDataFrame(list(enumerate(docs)), "doc_id long, text string")
+    sc = spark.sparkContext
+    jobs, rows = {}, {}
+    for k in (4, 64):
+        for query in (T.bpe_train, T.bpe_encode_stats):
+            group = f"test-bpe-jobs-{query.__name__}-{k}"
+            sc.setJobGroup(group, "bpe job count")
+            try:
+                rows[query.__name__, k] = query(df, k=k).collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs[query.__name__, k] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs["bpe_train", 4] == jobs["bpe_train", 64], jobs
+    assert jobs["bpe_encode_stats", 4] == jobs["bpe_encode_stats", 64], jobs
+    got = [
+        (r["sym_a"], r["sym_b"], r["merged"], r["pair_count"])
+        for r in sorted(rows["bpe_train", 64], key=lambda r: r["rank"])
+    ]
+    assert got == _bpe_reference(docs, 64) and len(got) == 64
 
 
 def test_bpe_encode_stats_consistency(spark):
